@@ -32,7 +32,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 import __spark_entry__ as entrymod  # noqa: E402
 from jmdfane_spark import persist  # noqa: E402
 from jmdfane_spark.plans.pipeline import run_pipeline  # noqa: E402
-from jmdfane_spark.session import get_spark  # noqa: E402
+from jmdfane_spark.session import get_spark, usable_cpus  # noqa: E402
 from jmdfane_spark.sources.tables import documents_as_files  # noqa: E402
 
 HEADLINE = [
@@ -53,7 +53,7 @@ def _cpu_times() -> list[int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or usable_cpus()
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     spark = get_spark(master=f"local[{cpus}]", app_name="jmdfane-bench")

@@ -42,12 +42,13 @@ class PipelineResult:
         the result itself.
 
         Call AFTER the labels are materialized (collect/count/write) and
-        will not be read again: the list includes the CC label
-        localCheckpoints, whose lineage is truncated, so a post-release
-        action on ``labels`` fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-        rather than recomputing. Scoped to THIS result only (frames are
-        unregistered, not drained, from the process-wide registry — other
-        live results are untouched).
+        will not be read again: every frame in the list is a
+        localCheckpoint (the stage outputs ``members``/``pairs``/``scored``
+        and the CC labels) or a parquet snapshot read, so lineage is cut
+        and a post-release action on ``labels`` fails with
+        CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND rather than recomputing. Scoped
+        to THIS result only (frames are unregistered, not drained, from the
+        process-wide registry — other live results are untouched).
         """
         from .. import persist as _persist
 
@@ -191,7 +192,7 @@ def run_pipeline(
         )
         # tfidf_features emits BOTH sparse representations; ship only the
         # one the chosen kernel reads — the other is dead weight through
-        # the members persist, the pair broadcast (twice), and every
+        # the members checkpoint, the pair broadcast (twice), and every
         # surviving pair row: (map, norm) for the JVM map_zip_with kernel,
         # (idx, val) for the Arrow bincount kernel.
         if tfidf_impl == "jvm":
@@ -199,14 +200,22 @@ def run_pipeline(
         else:
             feats = feats.drop("tfidf_map", "tfidf_norm")
         norm = norm.join(feats, "id", "left")
+    # Stage outputs read by later stages are lazy localCheckpoints, not
+    # persists: a persist leaves an InMemoryRelation in every downstream
+    # plan with its whole cached plan nested inside, which AQE re-plans and
+    # re-describes on every later query (one CC iteration's plan
+    # description ran to 2.6 M chars at 500 docs). A checkpoint is a
+    # LogicalRDD leaf. The count() below materializes it, so no action is
+    # added; the cost is that a lost block is not recomputed (the CC
+    # labels already worked this way) — checkpoint_dir is the durable mode.
     members = (
         norm.withColumn("block_key", F.concat_ws("|", "lang", "stem"))
         .drop("repo", "path", "commit")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     n_members = members.count()
-    # members is materialized (MEMORY_AND_DISK) — the tokenization barrier
-    # behind it is no longer needed by any live plan
+    # members is materialized and cut from its lineage — the tokenization
+    # barrier behind it is no longer needed by any live plan
     for _df in _staged:
         _df.unpersist()
     _staged.clear()
@@ -268,7 +277,7 @@ def run_pipeline(
     # retry determinism — guide §2.5); hashing the high-cardinality
     # (id_a, id_b) key spreads just as evenly, is retry-deterministic by
     # construction, and skips the sort.
-    pairs = pairs.repartition(n_part, "id_a", "id_b").persist()
+    pairs = pairs.repartition(n_part, "id_a", "id_b").localCheckpoint(eager=False)
     n_pairs = pairs.count()
     keys.unpersist()
     counts.unpersist()
@@ -281,7 +290,7 @@ def run_pipeline(
         ck.log_metric(stage="blocking", pairs_generated=n_pairs)
 
     # ---- stage 2: scoring -----------------------------------------------------
-    # Payload attaches via two joins of the (small, persisted) members
+    # Payload attaches via two joins of the (small, checkpointed) members
     # table, then one scoring pass. The joins are FORCED broadcast when the
     # payload genuinely fits: Catalyst's size ESTIMATE of the map/array
     # payload columns blows past the autoBroadcast threshold even for a
@@ -363,17 +372,23 @@ def run_pipeline(
                 "emb_cosine", "score"]
         return scored.select(*[c for c in keep if c in scored.columns])
 
-    # persist: scored feeds both the metrics count and the CC edge input —
-    # without it the whole scoring stage executes twice. Non-checkpointed
-    # runs drop the two sha columns from the cache: no downstream branch
-    # (edge filter, adaptive, per-block solvers, repair) reads them, and
-    # at sf0.1 they are ~60% of the cached bytes (2×64-char strings per
-    # pair); the checkpointed snapshot keeps the full documented schema.
+    # scored feeds both the metrics count and the CC edge input, so it is
+    # materialized once: a parquet snapshot when checkpointing, otherwise a
+    # localCheckpoint like members/pairs — without either the whole scoring
+    # stage executes twice. Non-checkpointed runs drop the two sha columns
+    # first: no downstream branch (edge filter, adaptive, per-block
+    # solvers, repair) reads them, and at sf0.1 they are ~60% of the
+    # materialized bytes (2×64-char strings per pair); the checkpointed
+    # snapshot keeps the full documented schema.
     _label("stage2 scoring")
     if ck:
         scored = ck.stage("scored", build_scored)
     else:
-        scored = build_scored().drop("content_sha_a", "content_sha_b").persist()
+        scored = (
+            build_scored()
+            .drop("content_sha_a", "content_sha_b")
+            .localCheckpoint(eager=False)
+        )
     if adaptive:
         edges = scoring.adaptive_threshold(scored, base=threshold)
     else:
@@ -389,10 +404,10 @@ def run_pipeline(
         ck.log_metric(stage="scoring", pairs_scored=n_scored)
 
     def _live_persists() -> list:
-        # intermediates the returned (lazy) labels still read from; handed
-        # to PipelineResult.release() so callers free them after
+        # localCheckpoints the returned (lazy) labels still read from;
+        # handed to PipelineResult.release() so callers free them after
         # materializing. With a checkpoint manager, `scored` is a parquet
-        # read, not a persist.
+        # read, not a checkpoint.
         out = [members, pairs]
         if not ck:
             out.append(scored)

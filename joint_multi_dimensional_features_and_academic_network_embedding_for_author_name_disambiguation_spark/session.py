@@ -11,6 +11,34 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the driver-memory default was 48g when tuned on a 128 GiB host; it stays
+# the ceiling
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask), not the host's."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity (macOS)
+        return os.cpu_count() or 1
+
+
+def physical_memory_kb() -> int:
+    """Physical memory in KiB (on Linux this is /proc/meminfo's MemTotal)."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    half of physical memory capped at 48g. In local mode the driver JVM is
+    the only executor and the Python workers share the host with it, so a
+    heap sized past RAM gets the JVM OOM-killed instead of spilling."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    return f"{min(physical_memory_kb() // 2 // 1024, DRIVER_MEM_CAP_MB)}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -20,12 +48,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster it is supplied by spark-submit and must be left None.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to the usable
+    CPU count when that is unset; on a real cluster it is supplied by
+    spark-submit and must be left None.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and not os.environ.get("SPARK_GRAFT_SUBMITTED"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or usable_cpus()
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
@@ -71,8 +100,8 @@ def get_spark(
         # Quiet local UI.
         "spark.ui.enabled": "false",
         # local mode: the driver JVM is the only executor — size it for the
-        # cached pair/feature tables (8g causes GC storms at 10M+ pairs)
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        # cached pair/feature tables, within the host (default_driver_memory)
+        "spark.driver.memory": default_driver_memory(),
     }
     if extra_conf:
         conf.update(extra_conf)

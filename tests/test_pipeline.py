@@ -6,6 +6,7 @@
 """
 
 import pyspark.sql.functions as F
+import pytest
 
 from jmdfane_spark.operators.evaluate import pairwise_f1, pairwise_f1_on_labeled_pairs
 from jmdfane_spark.plans.pipeline import normalize_files, run_pipeline
@@ -156,7 +157,11 @@ def test_repair_outliers_option(spark, fixture_dfs):
 def test_no_leaked_persists(spark, fixture_dfs):
     """r4 VERDICT cache hygiene: after materializing the result and calling
     release(), the run leaves NO cached RDDs behind (snapshot-relative —
-    the session is shared with other tests)."""
+    the session is shared with other tests). The stage outputs are
+    localCheckpoints, not persists, so the labels plan holds no
+    InMemoryRelation (each would nest its whole cached plan, re-planned
+    and re-described by every later query) — and freeing is final: an
+    action on the released labels must fail loudly, not recompute."""
     from jmdfane_spark import persist
     from jmdfane_spark.operators.dedup import minhash_lsh_pairs
 
@@ -169,10 +174,15 @@ def test_no_leaked_persists(spark, fixture_dfs):
 
     files, _, _ = fixture_dfs
     res = run_pipeline(spark, files, use_bands=True, use_tfidf=True)
+    plan = res.labels._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan, plan[:2000]
     res.labels.count()
     assert len(live_ids()) > len(before)  # persists were in use mid-run
     res.release()
     assert live_ids() <= before, "pipeline leaked persisted RDDs"
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        res.labels.count()
+    assert live_ids() <= before, "released labels were recomputed and re-cached"
 
     # operator-registry path (pairs_from_keys / dedup barriers)
     docs = files.select(F.concat_ws(":", "repo", "path").alias("id"), F.col("content").alias("text"))

@@ -10,6 +10,9 @@ For each `queries()` entry this prints a one-line summary —
   arrow    ArrowEvalPython stages (the only sanctioned Python hop)
   CARTESIAN / rowudf  red flags (CartesianProduct outside the documented
            brute-force baselines; BatchEvalPython = per-row Python)
+  plan_chars  length of the query's full QueryExecution description —
+           a persisted input nests its whole cached plan in every query
+           that reads it, and this column shows that bloat
 — and with ``--full <name>`` dumps the whole formatted plan for one query.
 
 Usage: python tools/explain_audit.py [sf_dir] [--full name] [--exec]
@@ -101,11 +104,13 @@ def main() -> None:
         "(the only sanctioned Python hop); rowudf = BatchEvalPython per-row",
         "Python (must be 0 everywhere); cartesian = CartesianProduct",
         "(allowed only in the documented brute-force ANN baselines).",
+        "plan_chars = length of `queryExecution().toString()` (logical,",
+        "optimized and physical plans), where nested cached plans show up.",
         "er_pipeline_cc shows 0 scans because the pipeline materializes",
         "stage checkpoints (LogicalRDD) before CC.",
         "",
-        "| query | scans | pushed | maxcols | bcast | smj | codegen | arrow | rowudf | cartesian | flags |",
-        "|---|---|---|---|---|---|---|---|---|---|---|",
+        "| query | scans | pushed | maxcols | bcast | smj | codegen | arrow | rowudf | cartesian | plan_chars | flags |",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     do_exec = "--exec" in sys.argv
     for name, fn in qs.items():
@@ -116,8 +121,9 @@ def main() -> None:
                 # runs and AQE finalizes the plan we're about to explain
                 df.collect()
             plan = formatted_plan(df)
+            plan_chars = len(df._jdf.queryExecution().toString())
         except Exception as e:  # noqa: BLE001
-            lines.append(f"| {name} | ERROR: {type(e).__name__} | | | | | | | | | |")
+            lines.append(f"| {name} | ERROR: {type(e).__name__} | | | | | | | | | | |")
             continue
         a = audit_one(name, plan)
         flags = []
@@ -131,7 +137,7 @@ def main() -> None:
         lines.append(
             f"| {name} | {a['scans']} | {a['pushed']} | {a['maxcols']} | {a['bcast']} "
             f"| {a['smj']} | {a['codegen']} | {a['arrow']} | {a['rowudf']} "
-            f"| {a['cartesian']} | {' '.join(flags)} |"
+            f"| {a['cartesian']} | {plan_chars} | {' '.join(flags)} |"
         )
         if full_name == name:
             print(plan)
